@@ -194,6 +194,30 @@ def test_rfm_rfe_scored_paths_have_no_single_partition_exchange(spark):
         assert "hashpartitioning(_b_" in plan, f"{name}: {plan[:800]}"
 
 
+def test_tag_rfm_declare_round_trip_budget(spark):
+    """Declaring tag_rfm builds its scoring columns as a few SQL
+    expressions, so a warm declare stays within a fixed py4j round-trip
+    budget. Building them one Column call per bound, offset and CASE arm
+    cost about 9,200 round trips, most of the op's declare time."""
+    from py4j.clientserver import ClientServerConnection
+
+    OPS["tag_rfm"].fn(spark, SF_DIR)  # warm: table reads, session confs
+    calls = 0
+    send = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        OPS["tag_rfm"].fn(spark, SF_DIR)
+    finally:
+        ClientServerConnection.send_command = send
+    assert 0 < calls <= 1500, calls
+
+
 def test_clean_pipeline_neardup_drop_is_anti_join(spark):
     plan = _plan(spark, "doc_clean_pipeline")
     assert "LeftAnti" in plan
@@ -373,6 +397,8 @@ def test_no_unaudited_driver_side_pulls():
             "scalar: incremental-agg batch split point",
         ("ranking.py", "combos = work.groupBy(*b_cols).count().collect()"):
             "bounded: <= 32^3-row bucket-count metadata frame",
+        ("ranking.py", "row = cached.selectExpr(*sql).collect()[0]"):
+            "scalar: one row of <= npart-1 quantile bounds per ordering",
         ("llm_similarity.py", "parts = pf.collect()"):
             "bounded: <= #partitions PCA moment rows (d + d^2 doubles each)",
         ("llm_similarity.py", 'fully = [r.cell for r in touched.join(survivors.select("cell").distinct(), "cell", "left_anti").collect()]  # <= cell-count rows (quantizer metadata)'):
@@ -964,10 +990,10 @@ def test_cbo_stats_flip_join_strategy(spark):
         shutil.rmtree(base, ignore_errors=True)
         spark.sql("DROP TABLE IF EXISTS up_cbotest_a")
         spark.sql("DROP TABLE IF EXISTS up_cbotest_b")
-        spark.range(400_000).selectExpr(
+        spark.range(0, 400_000, 1, 32).selectExpr(
             "id as k", "id % 8000 as sel", "repeat('x', 20) as pad"
         ).write.mode("overwrite").option("path", str(base / "a")).saveAsTable("up_cbotest_a")
-        spark.range(400_000).selectExpr(
+        spark.range(0, 400_000, 1, 32).selectExpr(
             "id % 50000 as k", "id as x", "repeat('y', 20) as pad2"
         ).write.mode("overwrite").option("path", str(base / "b")).saveAsTable("up_cbotest_b")
         q = (

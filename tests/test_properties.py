@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import pytest
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -95,6 +95,46 @@ def test_exact_ntile_scores_matches_window_ntile(spark, rows, k):
         for r in df.select("uid", F.ntile(k).over(w).alias("score")).collect()
     }
     assert got == want
+
+
+sort_values = st.one_of(
+    st.integers(min_value=-3, max_value=3).map(float),  # heavy ties
+    st.integers(min_value=-4, max_value=4).map(lambda d: 1e15 + 0.125 * d),
+    st.integers(min_value=-4, max_value=4).map(lambda d: -1e15 - d),
+    st.floats(min_value=-1e6, max_value=1e6, allow_nan=False),
+    st.none(),  # NULL sorts first, as in ntile's ORDER BY
+)
+
+
+@given(
+    rows=st.lists(st.tuples(sort_values, sort_values, sort_values), max_size=40),
+    k=st.integers(min_value=2, max_value=7),
+    npart=st.sampled_from([2, 4, 32]),
+)
+@example(rows=[], k=5, npart=32)
+@example(rows=[(-2.5, 1e15, 0.0)], k=5, npart=32)
+@example(rows=[(7.0, 7.0, 7.0)] * 11, k=3, npart=4)
+@settings(**SETTINGS)
+def test_exact_ntile_scores_three_orderings_match_window_ntile(spark, rows, k, npart):
+    """tag_rfm's shape: three orderings scored in one call off one shared
+    combo count, each column equal to ntile(k) OVER (ORDER BY v_i, uid)
+    for double sort values (negatives, ties, magnitudes near 1e15, NULLs),
+    and the empty, single-row and all-equal frames."""
+    from pyspark.sql import Window
+
+    from userportrait.ranking import exact_ntile_scores
+
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)], "uid int, v0 double, v1 double, v2 double"
+    )
+    cols = ["v0", "v1", "v2"]
+    got = exact_ntile_scores(
+        df, [(F.col(c), "uid", f"s_{c}") for c in cols], k=k, npart=npart
+    ).select("uid", *(f"s_{c}" for c in cols))
+    want = df.select(
+        "uid", *(F.ntile(k).over(Window.orderBy(c, "uid")).alias(c) for c in cols)
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
 
 
 @given(

@@ -7,12 +7,14 @@ the scalable replacement for ``ntile(k) OVER (ORDER BY ...)``, which plans as
 
 Decomposition (all JVM-side, no Python workers):
 
-  1. approxQuantile boundaries split the sort value into ~npart range buckets.
-     The boundaries only need to RESPECT the global order (rows in bucket i
-     sort before rows in bucket i+1; equal sort values share a bucket) — their
-     accuracy affects balance, never correctness.
+  1. one collected ``percentile_approx`` row of boundaries splits each sort
+     value into ~npart range buckets, ``size(filter(array(bounds), x -> _s
+     > x))``. The boundaries only need to RESPECT the global order (rows in
+     bucket i sort before rows in bucket i+1; equal sort values share a
+     bucket) — their accuracy affects balance, never correctness.
   2. one counting pass over the bucket columns (collected to the driver:
-     ≤ npart^len(orderings) combo rows — a metadata aggregate, not data).
+     ≤ npart^len(orderings) combo rows — a metadata aggregate, not data);
+     its marginals become literal offset arrays, ``element_at(offsets, _b+1)``.
   3. exact global rank = driver-computed prefix-sum offset of the bucket
      + row_number() within the bucket (hash-partitioned by bucket id, fully
      parallel; the in-bucket ordering carries the unique tie-break).
@@ -32,6 +34,9 @@ region); the unique tie-break bounds the damage to one bucket's row_number.
 
 from __future__ import annotations
 
+from collections import Counter
+from itertools import accumulate
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -47,58 +52,51 @@ def exact_ntile_scores(
     ``orderings``: (sort_value, tie_col, out_name) triples. ``sort_value`` is
     a Column in ASCENDING orientation (negate for DESC); ``tie_col`` a unique
     column name; ``out_name`` the int score column (1..k) to append.
+    Derived columns are SQL strings: a py4j round trip per Column call per
+    bound, offset and CASE arm would cost more than the two metadata jobs.
     """
-    work = df
-    for sort_value, _tie, out in orderings:
-        work = work.withColumn(f"_s_{out}", sort_value.cast("double"))
-    s_cols = [f"_s_{out}" for _, _, out in orderings]
-
+    outs = [out for _, _, out in orderings]
     # Persist spans only the two driver actions below (boundary sampling and
     # the combo count); the returned lazy plan recomputes deterministically.
-    cached = work.persist()
-    work = cached
+    cached = df.withColumns(
+        {f"_s_{out}": sort_value.cast("double") for sort_value, _, out in orderings}
+    ).persist()
     try:
-        probs = [i / npart for i in range(1, npart)]
-        all_bounds = work.approxQuantile(s_cols, probs, 1.0 / (4 * npart))
-        for (_, _, out), s_col, bounds in zip(orderings, s_cols, all_bounds):
-            uniq = sorted(set(bounds))
-            bkt = F.lit(0)
-            for b in uniq:
-                bkt = bkt + (F.col(s_col) > F.lit(float(b))).cast("int")
-            work = work.withColumn(f"_b_{out}", bkt)
+        probs = ", ".join(repr(i / npart) for i in range(1, npart))
+        sql = [f"percentile_approx(_s_{out}, array({probs}), {4 * npart})" for out in outs]
+        row = cached.selectExpr(*sql).collect()[0]
+        bounds, bucket_exprs = {}, {}
+        for out, got in zip(outs, row):
+            # NULL = no non-null input: a single bucket. repr -> CAST is exact.
+            bounds[out] = sorted(set(got or []))
+            lits = ", ".join(f"CAST('{b!r}' AS DOUBLE)" for b in bounds[out])
+            bucket = f"size(filter(array({lits}), x -> _s_{out} > x))" if lits else "0"
+            bucket_exprs[f"_b_{out}"] = F.expr(bucket)
+        work = cached.withColumns(bucket_exprs)
 
-        b_cols = [f"_b_{out}" for _, _, out in orderings]
+        b_cols = list(bucket_exprs)
         combos = work.groupBy(*b_cols).count().collect()
         total = sum(r["count"] for r in combos)
+        base, rem = divmod(total, k)
+        big = (base + 1) * rem  # rows covered by the oversized buckets
 
+        rank_exprs, score_exprs = {}, {}
         for _, tie, out in orderings:
-            marg: dict[int, int] = {}
+            marg: Counter[int] = Counter()
             for r in combos:
-                marg[r[f"_b_{out}"]] = marg.get(r[f"_b_{out}"], 0) + r["count"]
-            offset = 0
-            off_expr = F.lit(None).cast("bigint")
-            for b in sorted(marg):
-                off_expr = F.when(F.col(f"_b_{out}") == b, F.lit(offset)).otherwise(off_expr)
-                offset += marg[b]
-
-            w = Window.partitionBy(f"_b_{out}").orderBy(
-                F.col(f"_s_{out}").asc(), F.col(tie).asc()
+                marg[r[f"_b_{out}"]] += r["count"]
+            # offsets[b] = rows in buckets < b, for every bucket id 0..len(bounds).
+            offsets = accumulate((marg[b] for b in range(len(bounds[out]))), initial=0)
+            rank_exprs[f"_r_{out}"] = F.expr(
+                f"element_at(array({', '.join(f'{o}L' for o in offsets)}), _b_{out} + 1)"
+                f" + row_number() OVER (PARTITION BY _b_{out} ORDER BY _s_{out}, `{tie}`)"
             )
-            work = work.withColumn(
-                f"_r_{out}", (off_expr + F.row_number().over(w)).cast("bigint")
+            score_exprs[out] = F.expr(
+                f"CAST(CASE WHEN _r_{out} <= {big} THEN (_r_{out} - 1) div {base + 1} + 1"
+                f" ELSE {rem} + (_r_{out} - {big} - 1) div {max(base, 1)} + 1 END AS INT)"
             )
-            base, rem = divmod(total, k)
-            big = (base + 1) * rem  # rows covered by the oversized buckets
-            bucket = F.when(
-                F.col(f"_r_{out}") <= big,
-                F.expr(f"(_r_{out} - 1) div {base + 1}") + 1,
-            ).otherwise(
-                F.lit(rem) + F.expr(f"(_r_{out} - {big} - 1) div {max(base, 1)}") + 1
-            )
-            work = work.withColumn(out, bucket.cast("int"))
-
-        helper = [c for out in (o[2] for o in orderings) for c in (f"_s_{out}", f"_b_{out}", f"_r_{out}")]
-        return work.drop(*helper)
+        work = work.withColumns(rank_exprs).withColumns(score_exprs)
+        return work.drop(*(f"_{p}_{out}" for out in outs for p in "sbr"))
     finally:
         cached.unpersist(blocking=False)
 
